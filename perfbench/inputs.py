@@ -38,7 +38,7 @@ MAX_BYTES = 1 << 20  # 1 MiB: Common Crawl's record truncation limit
 CONTENT_SCALE = 6
 
 # batch_crawl: one corpus, split into files generated in parallel
-BATCH_FILES = 8
+BATCH_FILES = 6
 BATCH_DOCS_PER_FILE = 500
 # ingest_ticks: one untimed warm-up drop, then the fixed timed sequence;
 # sizes are positional and the same for every seed

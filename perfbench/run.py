@@ -24,6 +24,8 @@ import subprocess
 import sys
 import time
 
+T_START = time.perf_counter()
+
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 sys.path[:0] = [HERE, ROOT]
@@ -125,7 +127,11 @@ def main(argv=None) -> int:
         bench = workloads.Bench(spark, cores, args.seconds, work, input_dir, goldens, bool(args.trace))
         getattr(workloads, args.workload)(bench)
     finally:
+        t1 = time.perf_counter()
         _stop_spark(spark)
+        print(f"[perfbench] phases: start {t0 - T_START:.1f} s, get_spark {get_spark_s:.1f} s, "
+              f"workload {t1 - t0 - get_spark_s:.1f} s, stop {time.perf_counter() - t1:.1f} s",
+              file=sys.stderr)
     shutil.rmtree(work, ignore_errors=True)
 
     if args.trace:

@@ -35,9 +35,12 @@ from worker import parallel_map
 
 clock = time.perf_counter
 
-NOOP_REPS = 3  # batch_crawl resume no-ops
-EMPTY_TICK_REPS = 10  # ingest_ticks ticks that find no new file
-READ_REPS = 3
+# timed repetitions per round; rounds repeat until --seconds have passed,
+# so every metric's samples are spread over the whole timed interval
+MIN_ROUNDS = 2  # batch_crawl: a median needs more than one fresh run
+REPS_PER_ROUND = 2  # batch_crawl resume no-ops and reads after each fresh run
+EMPTIES_PER_TICK = 4  # ingest_ticks ticks that find no new file, after each tick
+TICK_READS = 3  # ingest_ticks reads after each replay of the drops
 PREFLIGHT_REPS = 10
 COMPLETED_REPS = 5
 SCAN_REPS = 2  # per input unit of batch_crawl; one per drop on ingest_ticks
@@ -112,6 +115,7 @@ class Bench:
         """Compare the extracted table with the oracle: exactly one row per
         url, byte-identical ``extracted_text`` (by SHA-256), equal
         ``status`` and ``po_number``. Each bad url counts as failed."""
+        t0 = clock()
         rows = (
             pipe.read_extracted()
             .select("url", "status", "po_number", F.sha2("extracted_text", 256).alias("h"))
@@ -129,6 +133,7 @@ class Bench:
         self.failed += len(bad)
         if bad:
             print(f"oracle mismatch on {len(bad)} urls, e.g. {sorted(bad)[:3]}", file=sys.stderr)
+        print(f"[perfbench] oracle check {clock() - t0:.3f} s", file=sys.stderr)
 
 
 def read_latest(pipe: ExtractionPipeline) -> None:
@@ -159,11 +164,10 @@ def _files(b: Bench, pipe: ExtractionPipeline) -> None:
 def batch_crawl(b: Bench) -> None:
     corpus = os.path.join(b.input_dir, "corpus")
     goldens = inputs.merge(b.goldens, "corpus/")
-    out = b.work("batch")
-    pipe = b.pipeline(out)
+    pipe = b.pipeline(b.work("batch"))
 
     def fresh():
-        shutil.rmtree(out, ignore_errors=True)
+        shutil.rmtree(pipe.output_dir, ignore_errors=True)
         return b.op(pipe.run, corpus, resume=False, cpu=True,
                     check=lambda r: r.rows_written == len(goldens))
 
@@ -171,25 +175,25 @@ def batch_crawl(b: Bench) -> None:
         return b.op(pipe.run, corpus, resume=True,
                     check=lambda r: r.buckets_processed == 0 and r.rows_written == 0)
 
-    t0 = clock()
-    fresh()
-    noop()
-    b.op(read_latest, pipe)
-    b.warmup_s = clock() - t0
-
-    runs = []
-    t0 = clock()
-    while True:
+    def round_(runs, noops, reads, reps):
+        """A fresh run, then ``reps`` resume no-ops and reads of its output."""
         res, wall, cpu = fresh()
         runs.append((res.rows_written if res else 0, wall, cpu))
-        if clock() - t0 >= b.seconds:
-            break
-    noops = [noop() for _ in range(NOOP_REPS)]
-    reads = [b.op(read_latest, pipe)[1] for _ in range(READ_REPS)]
+        noops += [noop() for _ in range(reps)]
+        reads += [b.op(read_latest, pipe)[1] for _ in range(reps)]
+
+    t0 = clock()
+    round_([], [], [], 1)
+    b.warmup_s = clock() - t0
+
+    runs, noops, reads = [], [], []
+    t0 = clock()
+    while len(runs) < MIN_ROUNDS or clock() - t0 < b.seconds:
+        round_(runs, noops, reads, REPS_PER_ROUND)
     b.check_output(pipe, goldens)
 
     b.e2e["docs_per_s"] = median([rows / wall for rows, wall, _ in runs])
-    b.e2e["docs_per_cpu_s"] = sum(r for r, _, _ in runs) / sum(c for _, _, c in runs)
+    b.e2e["docs_per_cpu_s"] = median([rows / cpu for rows, _, cpu in runs])
     b.e2e["tick_p50_s"] = median([wall for _, wall, _ in runs])
     b.e2e["resume_noop_s"] = median([wall for _, wall, _ in noops])
     b.e2e["read_latest_s"] = median(reads)
@@ -198,16 +202,11 @@ def batch_crawl(b: Bench) -> None:
         return
     b.tracer.enabled = True
 
-    # traced pass: the same fresh runs with spans; the difference from the
-    # untraced pass above is the tracing overhead
-    traced = []
-    for _ in runs:
-        with b.tracer.span("batch.fresh_run"):
-            res, wall, _ = fresh()
-        traced.append((res, wall))
-    b.layer["trace.overhead_frac"] = median([w for _, w in traced]) / b.e2e["tick_p50_s"] - 1
-    last = traced[-1][0]
-    run_s = median([w for _, w in traced])
+    # traced pass: one more fresh run with spans; its difference from the
+    # untraced runs above is the tracing overhead
+    with b.tracer.span("batch.fresh_run"):
+        last, run_s, _ = fresh()
+    b.layer["trace.overhead_frac"] = run_s / b.e2e["tick_p50_s"] - 1
     b.layer["pipeline.run_s"] = run_s
     b.layer["pipeline.rows_written"] = last.rows_written if last else 0
     b.layer["pipeline.buckets_processed"] = last.buckets_processed if last else 0
@@ -241,12 +240,15 @@ def ingest_ticks(b: Bench) -> None:
     docs = {d: len(b.goldens["drops/" + os.path.basename(d)]) for d in drops}
 
     def tick(pipe, inbox, ck, expect):
-        return b.op(run_available_now, b.spark, inbox, pipe, ck, cpu=True,
+        # CPU only over ticks that ingest a file; empty ones are too short
+        return b.op(run_available_now, b.spark, inbox, pipe, ck, cpu=expect > 0,
                     check=lambda n: n == expect)
 
-    def replay(root: str):
+    def replay(root: str, empties: Optional[list] = None):
         """The drop sequence from an empty output dir and checkpoint; a
-        tick is timed from its file landing to run_available_now returning."""
+        tick is timed from its file landing to run_available_now returning.
+        With ``empties`` given, each tick is followed by EMPTIES_PER_TICK
+        ticks that find no new file, whose walls are appended to it."""
         shutil.rmtree(root, ignore_errors=True)
         inbox, ck = os.path.join(root, "in"), os.path.join(root, "ck")
         os.makedirs(inbox)
@@ -257,6 +259,8 @@ def ingest_ticks(b: Bench) -> None:
             with b.tracer.span("streaming.tick") as span:
                 n, wall, cpu = tick(pipe, inbox, ck, 1)
             ticks.append((docs[d], wall, cpu, n or 0, span))
+            if empties is not None:
+                empties += [tick(pipe, inbox, ck, 0)[1] for _ in range(EMPTIES_PER_TICK)]
         return pipe, inbox, ck, ticks
 
     t0 = clock()
@@ -270,15 +274,14 @@ def ingest_ticks(b: Bench) -> None:
     b.op(read_latest, wpipe)
     b.warmup_s = clock() - t0
 
-    ticks = []
+    ticks, empties, reads = [], [], []
     t0 = clock()
     while True:
-        pipe, inbox, ck, replayed = replay(b.work("ticks"))
+        pipe, inbox, ck, replayed = replay(b.work("ticks"), empties)
         ticks += replayed
+        reads += [b.op(read_latest, pipe)[1] for _ in range(TICK_READS)]
         if clock() - t0 >= b.seconds:
             break
-    empties = [tick(pipe, inbox, ck, 0)[1] for _ in range(EMPTY_TICK_REPS)]
-    reads = [b.op(read_latest, pipe)[1] for _ in range(READ_REPS)]
     b.check_output(pipe, goldens)
 
     walls = [t[1] for t in ticks]
